@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expressi
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 
 /** Partial top-k per group as a first-class operator (SURVEY.md §2.8).
@@ -183,33 +184,25 @@ case class TopKPerKeyExec(
 class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-    e.injectOptimizerRule(_ => WindowTopKRewrite)
-    e.injectOptimizerRule(_ => TopKJoinPushdown)
-    e.injectOptimizerRule(_ => FilterThroughTopK)
-    e.injectOptimizerRule(_ => MergeFilterPushdown)
+    TopK.Rules.foreach(r => e.injectOptimizerRule(_ => r))
   }
 }
 
 object TopK {
 
-  /** Idempotently make the strategy + rewrite rule available on `spark`
+  /** graft's optimizer rules, in registration order — the one list both
+    * [[GraftSparkExtensions]] and [[ensureRegistered]] install. */
+  private[plans] val Rules: Seq[Rule[LogicalPlan]] = Seq(
+    WindowTopKRewrite, TopKJoinPushdown, FilterThroughTopK, MergeFilterPushdown)
+
+  /** Idempotently make the strategy + rewrite rules available on `spark`
     * (covers sessions built without the extensions conf). */
   def ensureRegistered(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    if (!spark.experimental.extraOptimizations.contains(WindowTopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ WindowTopKRewrite
-    if (!spark.experimental.extraOptimizations.contains(TopKJoinPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKJoinPushdown
-    if (!spark.experimental.extraOptimizations.contains(FilterThroughTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FilterThroughTopK
-    if (!spark.experimental.extraOptimizations.contains(MergeFilterPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MergeFilterPushdown
+    val x = spark.experimental
+    if (!x.extraStrategies.contains(TopKPerKeyStrategy))
+      x.extraStrategies = x.extraStrategies :+ TopKPerKeyStrategy
+    val missing = Rules.filterNot(x.extraOptimizations.contains)
+    if (missing.nonEmpty) x.extraOptimizations = x.extraOptimizations ++ missing
   }
 
   /** Top `k` rows per `keyCols` group under `sortCols` (use `.desc`/
@@ -218,22 +211,8 @@ object TopK {
     * keeps the input schema; rows within a group come out in sort order,
     * groups in no particular order. */
   def perKey(df: DataFrame, keyCols: Seq[String], sortCols: Seq[Column],
-      k: Int): DataFrame = {
-    require(k > 0)
-    val spark = df.sparkSession
-    ensureRegistered(spark)
-    val child = df.queryExecution.analyzed
-    val keys: Seq[Expression] = keyCols.map { n =>
-      child.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(
-          s"key '$n' not in ${child.output.map(_.name)}"))
-    }
-    val ordering = sortCols.map(c => GraftColumnBridge.eagerExpression(c) match {
-      case so: SortOrder => so
-      case e => SortOrder(e, Ascending)
-    })
-    GraftColumnBridge.ofRows(spark, TopKPerKeyNode(keys, ordering, k, child))
-  }
+      k: Int): DataFrame =
+    planned(df, keyCols, sortCols, k)(TopKPerKeyNode(_, _, k, _))
 
   /** Two-phase exact top-k per key: a map-side partial heap pass (no
     * shuffle) under the usual clustered final pass. Only correct for a
@@ -242,7 +221,25 @@ object TopK {
     * ≤ k·partitions rows instead of the whole input — use whenever k
     * ≪ rows-per-key, mandatory when `keyCols` is a constant. */
   def perKeyTwoPhase(df: DataFrame, keyCols: Seq[String],
-      sortCols: Seq[Column], k: Int): DataFrame = {
+      sortCols: Seq[Column], k: Int): DataFrame =
+    planned(df, keyCols, sortCols, k) { (keys, ordering, child) =>
+      TopKPerKeyNode(keys, ordering, k,
+        TopKPerKeyPartialNode(keys, ordering, k, child))
+    }
+
+  /** The partial pass alone — test hook for asserting its shuffle-input
+    * bound (≤ k rows per key per input partition). */
+  private[graft] def perKeyPartialForTest(df: DataFrame,
+      keyCols: Seq[String], sortCols: Seq[Column], k: Int): DataFrame =
+    planned(df, keyCols, sortCols, k)(TopKPerKeyPartialNode(_, _, k, _))
+
+  /** Resolve `keyCols` against `df`'s analyzed plan (a missing key is a
+    * named error) and `sortCols` to sort orders (bare columns ascending),
+    * then plan `node(keys, ordering, child)` on `df`'s session. */
+  private def planned(df: DataFrame, keyCols: Seq[String],
+      sortCols: Seq[Column], k: Int)(
+      node: (Seq[Expression], Seq[SortOrder], LogicalPlan) => LogicalPlan)
+      : DataFrame = {
     require(k > 0)
     val spark = df.sparkSession
     ensureRegistered(spark)
@@ -256,24 +253,6 @@ object TopK {
       case so: SortOrder => so
       case e => SortOrder(e, Ascending)
     })
-    GraftColumnBridge.ofRows(spark, TopKPerKeyNode(keys, ordering, k,
-      TopKPerKeyPartialNode(keys, ordering, k, child)))
-  }
-
-  /** The partial pass alone — test hook for asserting its shuffle-input
-    * bound (≤ k rows per key per input partition). */
-  private[graft] def perKeyPartialForTest(df: DataFrame,
-      keyCols: Seq[String], sortCols: Seq[Column], k: Int): DataFrame = {
-    val spark = df.sparkSession
-    ensureRegistered(spark)
-    val child = df.queryExecution.analyzed
-    val keys: Seq[Expression] = keyCols.map(n =>
-      child.output.find(_.name == n).get)
-    val ordering = sortCols.map(c => GraftColumnBridge.eagerExpression(c) match {
-      case so: SortOrder => so
-      case e => SortOrder(e, Ascending)
-    })
-    GraftColumnBridge.ofRows(spark,
-      TopKPerKeyPartialNode(keys, ordering, k, child))
+    GraftColumnBridge.ofRows(spark, node(keys, ordering, child))
   }
 }

@@ -18,22 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Correctness comes from two properties, not from locking:
   *  - data files are write-once (each commit writes to a fresh
   *    directory, never touching previous versions' files);
-  *  - a version EXISTS iff its manifest file exists, and the manifest
-  *    is published by an atomic rename from a temp name — readers
-  *    either see a complete version or none of it, never a partial
-  *    file list.
-  *
-  * CONCURRENCY SCOPE: the commit race is decided by the filesystem's
-  * no-overwrite rename (rename fails when the destination exists —
-  * HDFS and POSIX local filesystems guarantee this, and the spec
-  * asserts it). Plain object-store PUTs do NOT qualify: S3 PUT (and
-  * S3A's copy-based rename) is last-writer-wins, so two concurrent
-  * committers could both claim a version and one snapshot would be
-  * silently lost. On such stores this format needs a conditional-put
-  * primitive (`If-None-Match: *`) or an external lock/commit service
-  * standing in for the rename; single-writer pipelines are safe
-  * everywhere (readers only ever need manifest-read atomicity, which
-  * every store provides).
+  *  - a version EXISTS iff its manifest file exists, and manifests are
+  *    published through the [[VersionLog]] claim protocol (atomic
+  *    no-overwrite rename, retry on a lost race) — readers either see
+  *    a complete version or none of it, never a partial file list.
+  *    [[VersionLog]] also states which filesystems qualify.
   *
   * Readers resolve `latestVersion` once and then read a CONSISTENT
   * snapshot regardless of concurrent commits — the reason dashboards
@@ -44,57 +33,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale shape: the manifest holds file PATHS (thousands), never rows;
   * commit cost is the parquet write + one rename; version resolution
-  * is one directory listing. Optimistic concurrency: [[commit]] claims
-  * version n = latest+1 by the rename's create-if-absent semantics —
-  * a losing concurrent writer fails its rename and retries on n+1.
+  * is one directory listing.
   */
 object Manifest {
-
-  private def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import VersionLog.{Claim, fs}
 
   private def manifestDir(root: String) = s"$root/_manifests"
 
+  private def newUuid(): String = java.util.UUID.randomUUID().toString.take(8)
+
   /** All committed versions, ascending (empty for a fresh root). */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val dir = new Path(manifestDir(root))
-    val f = fs(spark, root)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(_.stripPrefix("v").stripSuffix(".json").toLong)
-      .sorted
-  }
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    VersionLog.versions(spark, manifestDir(root))
 
   def latestVersion(spark: SparkSession, root: String): Option[Long] =
     versions(spark, root).lastOption
 
   /** Commit `df` as the next version of the table; returns the version
-    * committed. Retries on manifest-rename collision (another writer
-    * claimed the version first). */
-  def commit(df: DataFrame, root: String, maxRetries: Int = 5): Long = {
+    * committed. Each attempt writes `df` to a fresh `_data/<v>-<uuid>`
+    * directory, which a lost claim deletes before retrying. */
+  def commit(df: DataFrame, root: String): Long = {
     val spark = df.sparkSession
     val f = fs(spark, root)
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(-1L) + 1L
-      val dataDir = s"$root/_data/$v-$uuid"
+    val uuid = newUuid()
+    VersionLog.publishNext(spark, manifestDir(root), "manifest commit") { latest =>
+      val dataDir = s"$root/_data/${latest.getOrElse(-1L) + 1L}-$uuid"
       df.write.mode("errorifexists").parquet(dataDir)
-      val files = listParquet(f, new Path(dataDir))
-      val tmp = new Path(manifestDir(root), s".tmp-$v-$uuid.json")
-      writeManifestTmp(f, tmp, files)
-      // atomic publish: rename fails (returns false) if v<n>.json exists
-      // — the losing writer cleans up and retries on the next version
-      if (f.rename(tmp, new Path(manifestDir(root), s"v$v.json"))) return v
-      f.delete(tmp, false)
-      f.delete(new Path(dataDir), true)
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new IllegalStateException(
-          s"manifest commit lost $maxRetries races at $root")
+      Some(written(f, dataDir))
     }
-    -1L // unreachable
   }
 
   /** Commit `df` as an APPEND: the next version references every file
@@ -105,32 +71,18 @@ object Manifest {
     * only the manifest publish retries on a version race, re-reading
     * the winner's file list so no concurrent append is lost. A fresh
     * root appends onto the empty file list (version 0). */
-  def commitAppend(df: DataFrame, root: String, maxRetries: Int = 5): Long = {
+  def commitAppend(df: DataFrame, root: String): Long = {
     val spark = df.sparkSession
     val f = fs(spark, root)
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"$root/_data/app-$uuid"
+    val dataDir = s"$root/_data/app-${newUuid()}"
     df.write.mode("errorifexists").parquet(dataDir)
     val newFiles = listParquet(f, new Path(dataDir))
-    var attempt = 0
-    while (true) {
-      val prev = latestVersion(spark, root)
-      val v = prev.getOrElse(-1L) + 1L
-      val files =
-        (prev.map(manifestFiles(spark, root, _)).getOrElse(Seq.empty)
-          ++ newFiles).sorted
-      val tmp = new Path(manifestDir(root), s".tmp-$v-$uuid.json")
-      writeManifestTmp(f, tmp, files)
-      if (f.rename(tmp, new Path(manifestDir(root), s"v$v.json"))) return v
-      f.delete(tmp, false)
-      attempt += 1
-      if (attempt > maxRetries) {
-        f.delete(new Path(dataDir), true)
-        throw new IllegalStateException(
-          s"append commit lost $maxRetries races at $root")
-      }
+    try VersionLog.publishNext(spark, manifestDir(root), "append commit") { latest =>
+      val prev = latest.map(manifestFiles(spark, root, _)).getOrElse(Seq.empty)
+      Some(Claim(fileList((prev ++ newFiles).sorted)))
+    } catch {
+      case e: IllegalStateException => f.delete(new Path(dataDir), true); throw e
     }
-    -1L // unreachable
   }
 
   /** Transactional OPTIMIZE: rewrite the CURRENT snapshot's physical
@@ -142,42 +94,27 @@ object Manifest {
     * manifest does — same two properties every commit rests on).
     *
     * Optimistic concurrency does the data-loss-prevention work: each
-    * attempt re-resolves the LATEST version, rewrites THAT snapshot's
-    * files, and claims latest+1 by no-overwrite rename. If an ordinary
-    * data commit wins the version race, the optimize loses its rename,
-    * discards the stale rewrite, and re-runs against the new snapshot —
-    * a concurrent commit can never be silently replaced by a compacted
-    * copy of an older version (spec-proven via a staged race).
+    * attempt re-resolves the LATEST version and rewrites THAT
+    * snapshot's files. If an ordinary data commit wins the version
+    * race, the optimize discards the stale rewrite and re-runs against
+    * the new snapshot — a concurrent commit can never be silently
+    * replaced by a compacted copy of an older version (spec-proven via
+    * a staged race).
     *
     * `rewrite(files, outDir)` writes the snapshot (given as its parquet
     * file list) into `outDir`; it must neither read nor touch anything
     * else under the root. */
-  def optimize(spark: SparkSession, root: String, maxRetries: Int = 5)(
+  def optimize(spark: SparkSession, root: String)(
       rewrite: (Seq[String], String) => Unit): Long = {
     val f = fs(spark, root)
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
+    val uuid = newUuid()
+    VersionLog.publishNext(spark, manifestDir(root), "optimize") { latest =>
+      val v = latest.getOrElse(
         throw new IllegalArgumentException(s"no versions to optimize at $root"))
-      val next = v + 1L
-      val dataDir = s"$root/_data/$next-$uuid"
+      val dataDir = s"$root/_data/${v + 1L}-$uuid"
       rewrite(manifestFiles(spark, root, v), dataDir)
-      val files = listParquet(f, new Path(dataDir))
-      val tmp = new Path(manifestDir(root), s".tmp-$next-$uuid.json")
-      writeManifestTmp(f, tmp, files)
-      if (f.rename(tmp, new Path(manifestDir(root), s"v$next.json")))
-        return next
-      // lost the race to a concurrent committer: discard the stale
-      // rewrite wholesale and re-optimize the NEW latest snapshot
-      f.delete(tmp, false)
-      f.delete(new Path(dataDir), true)
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new IllegalStateException(
-          s"optimize lost $maxRetries races at $root")
+      Some(written(f, dataDir))
     }
-    -1L // unreachable
   }
 
   /** Transactional DELETE — the lake-side analog of the SQL DELETE the
@@ -195,7 +132,7 @@ object Manifest {
     * SQL DELETE null semantics: rows where the predicate evaluates
     * NULL are KEPT (only predicate-TRUE rows go).
     *
-    * Optimistic concurrency, same loop as [[optimize]]: each attempt
+    * Optimistic concurrency, same as [[optimize]]: each attempt
     * re-resolves the LATEST version and re-applies the predicate to
     * THAT snapshot, so a delete racing an ordinary commit converges on
     * "new snapshot minus matching rows" — matching rows added by the
@@ -205,40 +142,29 @@ object Manifest {
     * version, or the CURRENT version untouched when nothing matches
     * (no empty no-op commits). */
   def deleteWhere(spark: SparkSession, root: String,
-      predicate: org.apache.spark.sql.Column, maxRetries: Int = 5): Long = {
+      predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, not}
     val f = fs(spark, root)
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
+    val uuid = newUuid()
     def norm(p: String): String = new Path(p).toUri.getPath
-    var attempt = 0
-    while (true) {
-      val v = latestVersion(spark, root).getOrElse(
+    VersionLog.publishNext(spark, manifestDir(root), "deleteWhere") { latest =>
+      val v = latest.getOrElse(
         throw new IllegalArgumentException(s"no versions to delete at $root"))
       val files = manifestFiles(spark, root, v)
       val touched = spark.read.parquet(files: _*)
         .filter(predicate)
         .select(input_file_name().as("f")).distinct()
         .collect().map(r => norm(r.getString(0))).toSet
-      if (touched.isEmpty) return v
-      val (rewrite, keep) = files.partition(p => touched(norm(p)))
-      val next = v + 1L
-      val dataDir = s"$root/_data/$next-$uuid"
-      spark.read.parquet(rewrite: _*)
-        .filter(not(coalesce(predicate, lit(false))))
-        .write.mode("errorifexists").parquet(dataDir)
-      val newFiles = (keep ++ listParquet(f, new Path(dataDir))).sorted
-      val tmp = new Path(manifestDir(root), s".tmp-$next-$uuid.json")
-      writeManifestTmp(f, tmp, newFiles)
-      if (f.rename(tmp, new Path(manifestDir(root), s"v$next.json")))
-        return next
-      f.delete(tmp, false)
-      f.delete(new Path(dataDir), true)
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new IllegalStateException(
-          s"deleteWhere lost $maxRetries races at $root")
+      if (touched.isEmpty) None
+      else {
+        val (rewrite, keep) = files.partition(p => touched(norm(p)))
+        val dataDir = s"$root/_data/${v + 1L}-$uuid"
+        spark.read.parquet(rewrite: _*)
+          .filter(not(coalesce(predicate, lit(false))))
+          .write.mode("errorifexists").parquet(dataDir)
+        Some(written(f, dataDir, carried = keep))
+      }
     }
-    -1L // unreachable
   }
 
   /** [[optimize]] with [[Layout.compactFiles]] as the rewrite: atomic
@@ -252,14 +178,6 @@ object Manifest {
       ()
     }
 
-  /** [[optimize]] with [[Layout.zorderWrite]] as the rewrite: atomic
-    * re-clustering by the z-order of two numeric columns. */
-  def optimizeZorder(spark: SparkSession, root: String, cA: String,
-      cB: String, nFiles: Int): Long =
-    optimize(spark, root) { (files, out) =>
-      Layout.zorderWrite(spark.read.parquet(files: _*), cA, cB, nFiles, out)
-    }
-
   /** Recursively list the parquet files under `dir`, sorted. */
   private def listParquet(f: FileSystem, dir: Path): Seq[String] = {
     val it = f.listFiles(dir, true)
@@ -271,42 +189,21 @@ object Manifest {
     out.result().sorted
   }
 
-  private def writeManifestTmp(f: FileSystem, tmp: Path,
-      files: Seq[String]): Unit = {
-    val body = files.map(p => "\"" + p.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
-    f.mkdirs(tmp.getParent)
-    val out = f.create(tmp, false)
-    out.write(body.getBytes("UTF-8")); out.close()
+  /** The claim for a version made of `carried` files plus the parquet
+    * files written under `dataDir`; a lost claim deletes `dataDir`. */
+  private def written(f: FileSystem, dataDir: String,
+      carried: Seq[String] = Seq.empty): Claim = {
+    val dir = new Path(dataDir)
+    Claim(fileList((carried ++ listParquet(f, dir)).sorted), () => f.delete(dir, true))
   }
 
+  /** A manifest body: the version's files as a JSON string array. */
+  private def fileList(files: Seq[String]): String =
+    files.map(VersionLog.quote).mkString("[", ",", "]")
+
   private def manifestFiles(spark: SparkSession, root: String, v: Long)
-      : Seq[String] = {
-    val p = new Path(manifestDir(root), s"v$v.json")
-    val f = fs(spark, root)
-    require(f.exists(p), s"no version $v at $root")
-    val in = f.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    // manifest bodies are a flat JSON string array written by commit().
-    // Tokenize properly (quote-aware, escape-aware) — splitting on ','
-    // would corrupt any path that legally contains a comma.
-    val out = Seq.newBuilder[String]
-    var i = 0
-    while (i < body.length) {
-      if (body(i) == '"') {
-        val sb = new StringBuilder
-        i += 1
-        while (body(i) != '"') {
-          if (body(i) == '\\') { sb.append(body(i + 1)); i += 2 }
-          else { sb.append(body(i)); i += 1 }
-        }
-        out += sb.toString
-      }
-      i += 1
-    }
-    out.result()
-  }
+      : Seq[String] =
+    VersionLog.tokens(VersionLog.body(spark, manifestDir(root), v, "version"))
 
   /** Read a committed snapshot: the latest by default, or any retained
     * `version` (time travel). The file list is resolved ONCE, so the

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-table atomic commit over [[Manifest]] tables — the lake analog
@@ -39,64 +39,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * would keep exactly those orphans and delete the tx-pinned
   * snapshot), exactly like a rolled-back transaction.
   *
-  * Concurrency: same optimistic loop as [[Manifest.commit]] — the tx
-  * number is claimed by the rename's create-if-absent semantics, a
-  * losing writer re-reads the new latest tx, re-merges its pins, and
-  * retries on n+1 (its per-table versions stay valid: table manifests
-  * are append-only). Concurrent transactions over DISJOINT table sets
-  * merge cleanly (each retry re-merges the other's pins); two
-  * transactions writing the SAME table are last-published-wins at the
-  * tx level — the semantics of the reference's own last UPDATE — so
-  * multi-writer pipelines should partition table ownership or
-  * serialize commits externally. Same filesystem scope as
-  * [[Manifest]]: the rename must fail on an existing destination
-  * (HDFS/POSIX; not plain S3 PUT).
+  * Concurrency: the tx number is claimed through the [[VersionLog]]
+  * protocol, like a table version. A losing writer re-merges its pins
+  * onto the winner's and retries on the next number (its per-table
+  * versions stay valid: table manifests are append-only). Concurrent
+  * transactions over DISJOINT table sets merge cleanly (each retry
+  * re-merges the other's pins); two transactions writing the SAME
+  * table are last-published-wins at the tx level — the semantics of
+  * the reference's own last UPDATE — so multi-writer pipelines should
+  * partition table ownership or serialize commits externally.
   *
   * Scale shape: a tx record is a handful of (name, version) pairs —
   * commit cost is the tables' parquet writes plus N+1 renames; nothing
   * here grows with data volume.
   */
 object TxManifest {
-
-  private def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import VersionLog.{Claim, fs}
 
   private def txDir(txRoot: String) = s"$txRoot/_txlog"
 
   private def tableRoot(txRoot: String, table: String) = s"$txRoot/$table"
 
   /** All published transactions, ascending (empty for a fresh root). */
-  def txVersions(spark: SparkSession, txRoot: String): Seq[Long] = {
-    val dir = new Path(txDir(txRoot))
-    val f = fs(spark, txRoot)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(_.stripPrefix("v").stripSuffix(".json").toLong)
-      .sorted
-  }
+  def txVersions(spark: SparkSession, txRoot: String): Seq[Long] =
+    VersionLog.versions(spark, txDir(txRoot))
 
   def latestTx(spark: SparkSession, txRoot: String): Option[Long] =
     txVersions(spark, txRoot).lastOption
 
   /** The {table → manifest version} pins of transaction `tx`. */
   def tableVersions(spark: SparkSession, txRoot: String, tx: Long)
-      : Map[String, Long] = {
-    val p = new Path(txDir(txRoot), s"v$tx.json")
-    val f = fs(spark, txRoot)
-    require(f.exists(p), s"no transaction $tx at $txRoot")
-    val in = f.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    // bodies are flat {"name":123,...} written by commit(); table names
-    // are caller-chosen path segments (no quotes/control chars), so a
-    // quote-delimited scan is exact
-    val pat = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(\\d+)".r
-    pat.findAllMatchIn(body)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-        -> m.group(2).toLong)
-      .toMap
-  }
+      : Map[String, Long] =
+    VersionLog.tokens(VersionLog.body(spark, txDir(txRoot), tx, "transaction"))
+      .grouped(2).map { case Seq(t, v) => t -> v.toLong }.toMap
 
   /** Atomically publish one snapshot spanning all of `tables`: commit
     * each DataFrame as its table's next [[Manifest]] version, then
@@ -104,20 +79,16 @@ object TxManifest {
     * become visible to tx readers all at once or not at all. Returns
     * the tx number. Table names become path segments under `txRoot`
     * and must match `[A-Za-z0-9._-]+` (not dots-only, not starting
-    * with '_'). */
-  def commit(spark: SparkSession, txRoot: String,
-      tables: Map[String, DataFrame], maxRetries: Int = 5): Long =
-    commitAt(spark, txRoot, tables, Map.empty, maxRetries)
-
-  /** [[commit]] plus `pinned`: {table → ALREADY-COMMITTED manifest
-    * version} pairs to bind into the same transaction — for tables the
-    * caller committed itself (e.g. via [[Manifest.commitAppend]], which
-    * plain commit() can't express). The pinned versions stay invisible
+    * with '_').
+    *
+    * `pinned` binds {table → ALREADY-COMMITTED manifest version} pairs
+    * into the same transaction — for tables the caller committed
+    * itself (e.g. via [[Manifest.commitAppend]]). They stay invisible
     * to tx readers until this tx record publishes, exactly like the
     * freshly committed ones. */
-  def commitAt(spark: SparkSession, txRoot: String,
-      tables: Map[String, DataFrame], pinned: Map[String, Long],
-      maxRetries: Int = 5): Long = {
+  def commit(spark: SparkSession, txRoot: String,
+      tables: Map[String, DataFrame],
+      pinned: Map[String, Long] = Map.empty): Long = {
     require(tables.nonEmpty || pinned.nonEmpty, "empty transaction")
     // names become path segments AND flat-JSON keys: restrict to a
     // safe charset (no separators, quotes, backslashes or control
@@ -129,7 +100,6 @@ object TxManifest {
         s"bad table name: '$t' (allowed: [A-Za-z0-9._-]+, not dots-only, " +
           "not starting with '_')")
     }
-    val f = fs(spark, txRoot)
     // phase 1: per-table commits — individually atomic, invisible to tx
     // readers until phase 2 publishes the record that references them.
     // Sorted for a deterministic commit order (diagnosability, not
@@ -137,39 +107,18 @@ object TxManifest {
     val committed = tables.toSeq.sortBy(_._1).map { case (t, df) =>
       t -> Manifest.commit(df, tableRoot(txRoot, t))
     }.toMap ++ pinned
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    var attempt = 0
-    while (true) {
-      // phase 2: publish {prev pins ++ this tx's tables} as tx n+1.
-      // Resolve the latest tx ONCE per attempt: deriving pins and the
-      // claimed number from two separate listings could pair tx n−1's
-      // pins with number n+1 if a concurrent tx published in between,
-      // silently dropping that tx's pins even though our rename wins.
-      // With one resolution, a tx publishing after it makes our rename
-      // fail and we re-merge against it on retry.
-      val last = latestTx(spark, txRoot)
+    // phase 2: publish {latest tx's pins ++ this tx's tables}. Pins and
+    // number come from the SAME resolution of the latest tx, so a tx
+    // publishing in between makes our claim fail and we re-merge
+    // against it on retry — never pair old pins with a newer number.
+    VersionLog.publishNext(spark, txDir(txRoot), "tx commit") { last =>
       val prev = last.map(tableVersions(spark, txRoot, _))
         .getOrElse(Map.empty[String, Long])
-      val pins = prev ++ committed
-      val n = last.getOrElse(-1L) + 1L
-      val body = pins.toSeq.sortBy(_._1).map { case (t, v) =>
-        "\"" + t.replace("\\", "\\\\").replace("\"", "\\\"") + "\":" + v
-      }.mkString("{", ",", "}")
-      val tmp = new Path(txDir(txRoot), s".tmp-$n-$uuid.json")
-      f.mkdirs(tmp.getParent)
-      val out = f.create(tmp, false)
-      out.write(body.getBytes("UTF-8")); out.close()
-      if (f.rename(tmp, new Path(txDir(txRoot), s"v$n.json"))) return n
-      // lost the tx-number race: the table versions stay committed
-      // (append-only manifests), only the record retries with re-merged
-      // pins on the next number
-      f.delete(tmp, false)
-      attempt += 1
-      if (attempt > maxRetries)
-        throw new IllegalStateException(
-          s"tx commit lost $maxRetries races at $txRoot")
+      val body = (prev ++ committed).toSeq.sortBy(_._1)
+        .map { case (t, v) => VersionLog.quote(t) + ":" + v }
+        .mkString("{", ",", "}")
+      Some(Claim(body))
     }
-    -1L // unreachable
   }
 
   /** Read `table` at the snapshot of transaction `tx` (latest tx by
@@ -178,10 +127,7 @@ object TxManifest {
     * the table states some single transaction published together. */
   def read(spark: SparkSession, txRoot: String, table: String,
       tx: Option[Long] = None): DataFrame = {
-    val n = tx.orElse(latestTx(spark, txRoot))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no transactions at $txRoot"))
-    val pins = tableVersions(spark, txRoot, n)
+    val (n, pins) = resolve(spark, txRoot, tx)
     val v = pins.getOrElse(table, throw new IllegalArgumentException(
       s"table '$table' not in transaction $n at $txRoot"))
     Manifest.read(spark, tableRoot(txRoot, table), Some(v))
@@ -222,12 +168,17 @@ object TxManifest {
   /** All tables of one transaction, resolved together (latest by
     * default): the multi-table consistent-snapshot read. */
   def snapshot(spark: SparkSession, txRoot: String,
-      tx: Option[Long] = None): Map[String, DataFrame] = {
+      tx: Option[Long] = None): Map[String, DataFrame] =
+    resolve(spark, txRoot, tx)._2.map { case (t, v) =>
+      t -> Manifest.read(spark, tableRoot(txRoot, t), Some(v))
+    }
+
+  /** Transaction `tx` (latest by default) and its pins. */
+  private def resolve(spark: SparkSession, txRoot: String, tx: Option[Long])
+      : (Long, Map[String, Long]) = {
     val n = tx.orElse(latestTx(spark, txRoot))
       .getOrElse(throw new IllegalArgumentException(
         s"no transactions at $txRoot"))
-    tableVersions(spark, txRoot, n).map { case (t, v) =>
-      t -> Manifest.read(spark, tableRoot(txRoot, t), Some(v))
-    }
+    (n, tableVersions(spark, txRoot, n))
   }
 }

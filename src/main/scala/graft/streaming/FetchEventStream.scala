@@ -170,7 +170,7 @@ object FetchEventStream {
           // atomically.
           val ledgerV = Manifest.commitAppend(ledgerRows,
             s"$txRoot/fetch_ledger")
-          TxManifest.commitAt(spark, txRoot,
+          TxManifest.commit(spark, txRoot,
             Map("observations" -> merged),
             pinned = Map("fetch_ledger" -> ledgerV))
         }

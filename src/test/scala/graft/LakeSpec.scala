@@ -693,4 +693,88 @@ class LakeSpec extends SparkTestBase {
     assert(Manifest.read(spark, root, Some(0L)).as[Long].collect().toSeq
       == Seq(1L))
   }
+
+  test("on-disk format: a tx record is the sorted {name:version} object " +
+      "and a manifest is the sorted JSON array of its version's files") {
+    import graft.sources.TxManifest
+    import org.apache.hadoop.fs.Path
+    val txRoot = Files.createTempDirectory("txfmt").resolve("lake").toString
+    TxManifest.commit(spark, txRoot, Map(
+      "b" -> Seq(10L).toDF("y"), "a" -> Seq(1L).toDF("x")))
+    val tx = TxManifest.commit(spark, txRoot, Map("a" -> Seq(2L).toDF("x")))
+    val fs = new Path(txRoot)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def text(p: String): String = {
+      val in = fs.open(new Path(p))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    assert(text(s"$txRoot/_txlog/v$tx.json") == """{"a":1,"b":0}""")
+    val it = fs.listFiles(new Path(s"$txRoot/a/_data"), true)
+    val files = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".parquet") && p.getParent.getName.startsWith("1-"))
+        files += p.toString
+    }
+    val expected = files.result().sorted.map("\"" + _ + "\"")
+      .mkString("[", ",", "]")
+    assert(expected.length > 2, "version 1 of table a wrote no files")
+    assert(text(s"$txRoot/a/_manifests/v1.json") == expected)
+  }
+
+  test("VersionLog: a claim lost inside the attempt discards once and " +
+      "retries on n+1 with a body recomputed from the winner") {
+    import graft.sources.VersionLog
+    import VersionLog.Claim
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("vlog").resolve("_log").toString
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def put(v: Long, body: String): Unit = {
+      val out = fs.create(new Path(dir, s"v$v.json"), false)
+      out.write(body.getBytes("UTF-8")); out.close()
+    }
+    put(0L, "[\"base\"]")
+    var seen = Seq.empty[Option[Long]]
+    var discards = 0
+    val v = VersionLog.publishNext(spark, dir, "test publish") { latest =>
+      seen :+= latest
+      // the first attempt is overtaken: a concurrent writer claims v1
+      if (seen.size == 1) put(1L, "[\"winner\"]")
+      val prev = VersionLog.tokens(VersionLog.body(spark, dir, latest.get, "version"))
+      Some(Claim((prev :+ "mine").map(VersionLog.quote).mkString("[", ",", "]"),
+        () => discards += 1))
+    }
+    assert(v == 2L, s"the retry must land on n+1: $v")
+    assert(seen == Seq(Some(0L), Some(1L)))
+    assert(discards == 1)
+    assert(VersionLog.tokens(VersionLog.body(spark, dir, 2L, "version")) ==
+      Seq("winner", "mine"), "the retried body must derive from the winner")
+    assert(VersionLog.versions(spark, dir) == Seq(0L, 1L, 2L))
+  }
+
+  test("VersionLog: exhausting the retries raises the named " +
+      "IllegalStateException and leaves no temp file behind") {
+    import graft.sources.VersionLog
+    import org.apache.hadoop.fs.Path
+    val root = Files.createTempDirectory("vlogx").resolve("tbl").toString
+    val dir = s"$root/_manifests"
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var attempts = 0
+    var discards = 0
+    val e = intercept[IllegalStateException] {
+      VersionLog.publishNext(spark, dir, "test publish") { latest =>
+        attempts += 1
+        // every attempt is overtaken by a writer claiming its number
+        val n = latest.getOrElse(-1L) + 1L
+        val out = fs.create(new Path(dir, s"v$n.json"), false)
+        out.write("[]".getBytes("UTF-8")); out.close()
+        Some(VersionLog.Claim("[]", () => discards += 1))
+      }
+    }
+    assert(e.getMessage == s"test publish lost ${VersionLog.Retries} races at $root")
+    assert(attempts == VersionLog.Retries + 1 && discards == attempts)
+    val left = fs.listStatus(new Path(dir)).map(_.getPath.getName)
+    assert(!left.exists(_.startsWith(".tmp-")), s"temp files left: ${left.mkString(",")}")
+    assert(left.length == attempts, left.mkString(","))
+  }
 }

@@ -190,4 +190,28 @@ class TopKPerKeySpec extends SparkTestBase {
     val got = ranked.collect().map(_.getAs[Double]("v")).toSeq.sorted
     assert(got == Seq(7.0), s"filter-through-topk changed results: $got")
   }
+
+  test("perKey, perKeyTwoPhase and the partial test hook resolve keys " +
+      "the same way: a missing key is a named error, k must be positive; " +
+      "ensureRegistered installs each rule once") {
+    val entries = Seq[(org.apache.spark.sql.DataFrame, Seq[String],
+        Seq[org.apache.spark.sql.Column], Int) => org.apache.spark.sql.DataFrame](
+      TopK.perKey, TopK.perKeyTwoPhase, TopK.perKeyPartialForTest)
+    for (f <- entries) {
+      val e = intercept[IllegalArgumentException] {
+        f(data, Seq("nokey"), Seq(col("id")), 3)
+      }
+      assert(e.getMessage.contains("key 'nokey' not in"), e.getMessage)
+      intercept[IllegalArgumentException](f(data, Seq("key"), Seq(col("id")), 0))
+    }
+    TopK.ensureRegistered(spark)
+    TopK.ensureRegistered(spark)
+    import graft.plans._
+    val rules = Seq(WindowTopKRewrite, TopKJoinPushdown, FilterThroughTopK,
+      MergeFilterPushdown)
+    val opts = spark.experimental.extraOptimizations
+    assert(opts.filter(r => rules.contains(r)) == rules, opts.toString)
+    assert(spark.experimental.extraStrategies
+      .count(_ == TopKPerKeyStrategy) == 1)
+  }
 }
