@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Hashing
 import graft.functions.VectorOps._
@@ -430,25 +431,86 @@ object Similarity {
     rankTopK(exact, k)
   }
 
+  // ---- Lloyd training: one driver-side loop for every trainer ---------
+
+  /** Lloyd state on the driver: (key column values, vector) entries —
+    * a centroid per cid, or a codeword per (subspace, cid) or (cell,
+    * subspace, cid). */
+  private type LloydState = Seq[(Seq[Any], Array[Double])]
+
+  /** A collected (key columns..., array<double>) row as a state entry;
+    * the doubles are the collected values bit for bit. */
+  private def entry(r: Row): (Seq[Any], Array[Double]) =
+    r.toSeq.init -> r.getSeq[Double](r.length - 1).toArray
+
+  /** Collects a seed table (key columns, then one array<double> column)
+    * as Lloyd state, ordered by key in Spark's own ordering of the key
+    * types — the order `array_sort` gives them, so a trainer that packs
+    * the state in this order keeps the smallest-cid argmin tie-break
+    * for any orderable cid type. Sorted locally: no extra job. */
+  private def collectState(seeds: DataFrame): LloydState = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    val keyT = StructType(seeds.schema.fields.init)
+    val internal = CatalystTypeConverters.createToCatalystConverter(keyT)
+    seeds.collect().toSeq.map(entry)
+      .sortBy(e => internal(Row.fromSeq(e._1)))(TypeUtils.getInterpretedOrdering(keyT))
+  }
+
+  /** `state` as a LocalRelation shaped like the seed table `like`. */
+  private def stateFrame(like: DataFrame, state: LloydState): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    like.sparkSession.createDataFrame(
+      state.map { case (key, v) => Row.fromSeq(key :+ v.toSeq) }.asJava, like.schema)
+  }
+
+  /** The one Lloyd loop behind [[kmeansRefine]], [[pqTrain]] and
+    * [[residualTrainFromSub]]. The trained state — centroids or
+    * codewords, sized by the seeds, never by the corpus — lives on the
+    * driver between rounds. Each round hands it to `means`, which builds
+    * the caller's own argmin (against the state broadcast as a
+    * LocalRelation, or inlined as a literal) and its means aggregate
+    * over the corpus: (key columns..., array<double> mean). Collecting
+    * that aggregate is the round's ONE query (AQE launches a job per
+    * query stage of it); a key it does not return is an empty cell and
+    * keeps its previous vector (deterministic, no resampling).
+    *
+    * No row cap guards the collect: every round's argmin already puts
+    * the whole state on the driver — a broadcast relation is built
+    * there — so keeping it there between rounds bounds the driver by
+    * the same state, and a distributed loop would hold no less. */
+  private def lloyd(seeds: LloydState, iters: Int)(
+      means: LloydState => DataFrame): LloydState = {
+    var state = seeds
+    for (_ <- 0 until iters) {
+      val upd = means(state).collect().map(entry).toMap
+      state = state.map { case (key, v) => key -> upd.getOrElse(key, v) }
+    }
+    state
+  }
+
+  /** Width of one of the `m` PQ subspaces of the 64-dim embeddings. */
+  private def subDim(m: Int): Int = {
+    require(m > 0 && 64 % m == 0,
+      s"m = $m PQ subspaces must evenly split the 64 embedding dims")
+    64 / m
+  }
+
   /** Lloyd's k-means refinement for the IVF coarse quantizer: start
     * from deterministic seed centroids (e.g. a hash-chosen corpus
     * subset), iterate assign → recompute means. Turns [[ivfTopK]]'s
     * fixed cells into TRAINED cells — tighter cells, better
     * recall-per-probe at the same query cost.
     *
-    * Scale shape per round: one broadcast argmin assignment over the
-    * corpus (no shuffle of vectors), then ONE shuffle of (cid, pos,
-    * component) triples for the elementwise mean — map-side combined,
-    * state k·dim, independent of corpus size. Rounds materialize via
-    * persist so lineage stays flat. Empty cells keep their previous
-    * centroid (deterministic; no resampling randomness).
-    */
-  /** Centroid row cap for the driver-resident Lloyd loop in
-    * [[kmeansRefine]]: k rows × (dim + 1) doubles ≈ 32 MB of driver
-    * state at the cap. A seed set past it (or a non-integral cid
-    * column) takes the distributed persist-per-round path. */
-  private val DriverCentroidMaxRows = 1 << 16
-
+    * Runs on the shared [[lloyd]] loop, so each round is ONE query: a
+    * broadcast argmin assignment over the corpus (no shuffle of
+    * vectors), then one map-side-combined shuffle of (cid, pos,
+    * component) triples for the elementwise mean — state k·dim,
+    * independent of corpus size. Empty cells keep their previous
+    * centroid (deterministic; no resampling randomness). Any orderable
+    * cid type trains; ties go to the smallest cid in Spark's ordering.
+    * Returns the (cid, e) centroids as a LocalRelation: nothing stays
+    * cached. */
   def kmeansRefine(corpus: DataFrame, seeds: DataFrame, iters: Int = 5,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -458,105 +520,29 @@ object Similarity {
     val c = withNorm(corpus, idCol, vecCol).persist(MEMORY_AND_DISK)
     val cent0 = withNorm(seeds, idCol, vecCol)
       .select(col("vec_id").as("cid"), col("e"))
-    val cidT = cent0.schema("cid").dataType
-    // the per-round means aggregate — the ONLY fact-scale work of a
-    // round, identical in both paths below (posexplode → per-(cid,pos)
-    // avg → re-assembled array; the aggregation plan is byte-for-byte
-    // the one the old join-per-round form ran, so the float means are
-    // unchanged)
-    def roundMeans(centPacked: DataFrame): DataFrame = {
-      val assign = c.as("v").crossJoin(broadcast(centPacked))
-        .select(col("v.vec_id").as("vid"), col("v.e").as("e"),
+    // NearestCellsL2 reads a bigint cid: the packed row carries each
+    // centroid's state position, in cid order, and `cids` maps the
+    // winning position back to its cid before the means aggregate
+    val packT = StructType.fromDDL(
+      s"cids array<${cent0.schema("cid").dataType.sql}>, " +
+        "cpack array<struct<cid: bigint, ce: array<double>>>")
+    val trained = lloyd(collectState(cent0), iters) { state =>
+      val packed = spark.createDataFrame(Seq(Row(state.map(_._1.head),
+        state.zipWithIndex.map { case ((_, v), p) => Row(p.toLong, v.toSeq) }))
+        .asJava, packT)
+      c.as("v").crossJoin(broadcast(packed))
+        .select(col("v.e").as("e"), col("cids"),
           explode(column(graft.functions.NearestCellsL2(
-            expression(col("v.e")), expression(col("cpack")), 1))).as("cid"))
-      assign
-        .select(col("cid"), posexplode(col("e")).as(Seq("pos", "x")))
+            expression(col("v.e")), expression(col("cpack")), 1))).as("p"))
+        .select(col("cids")(col("p")).as("cid"),
+          posexplode(col("e")).as(Seq("pos", "x")))
         .groupBy("cid", "pos").agg(avg(col("x")).as("m"))
         .groupBy("cid")
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("cid"), expr("transform(pm, p -> p.m)").as("e"))
     }
-    val integralCid = cidT match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    }
-    val probe =
-      if (integralCid) cent0.limit(DriverCentroidMaxRows + 1).collect()
-      else Array.empty[Row]
-    if (integralCid && probe.length <= DriverCentroidMaxRows &&
-        probe.nonEmpty) {
-      // DRIVER-SIDE rounds (round 13 — the pqTrain/residualTrain
-      // lifecycle): the k-row centroid state lives on the driver, each
-      // round broadcasts it as a locally packed LocalRelation (no pack
-      // job, no per-round persist+count, no stale-round cache to
-      // release) and runs exactly ONE Spark job — the means aggregate,
-      // whose k·dim result is all that crosses back. Values are the
-      // collected doubles bit-for-bit and the keep-previous
-      // empty-cell merge is the old left-join coalesce run locally,
-      // so trained centroids are unchanged (oracle + [R] dump gates
-      // re-proven this round).
-      def cidKey(r: Row): Long = r.get(0) match {
-        case l: java.lang.Long => l
-        case i: java.lang.Integer => i.longValue
-        case other => sys.error(s"non-integral cid: $other")
-      }
-      val packSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cpack",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("cid", cidT),
-              org.apache.spark.sql.types.StructField("ce",
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.DoubleType))))))))
-      var rows: Array[Row] = probe.sortBy(cidKey)
-      for (_ <- 0 until iters) {
-        val packedDf = spark.createDataFrame(
-          Seq(Row(rows.map(r => Row(r.get(0), r.get(1))).toSeq)).asJava,
-          packSchema)
-        val upd = roundMeans(packedDf).collect()
-          .map(r => cidKey(r) -> r.getSeq[Double](1)).toMap
-        rows = rows.map(r =>
-          upd.get(cidKey(r)).fold(r)(mu => Row(r.get(0), mu)))
-      }
-      c.unpersist()
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cid", cidT),
-        org.apache.spark.sql.types.StructField("e",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))
-      // LocalRelation return: nothing stays cached at all — the caller
-      // unpersist in the hygiene contract becomes a no-op
-      spark.createDataFrame(rows.toSeq.asJava, outSchema)
-    } else {
-      // DISTRIBUTED fallback (oversized or non-integral-cid seed sets):
-      // each round's persist supersedes the previous one — release the
-      // stale round immediately so an iters-round refine leaves exactly
-      // ONE k-row table cached, not iters of them (session-cache
-      // hygiene; a localCheckpoint formulation was tried round 12 and
-      // rejected: it truncates the lineage but its blocks are invisible
-      // to the caller-unpersist hygiene contract, and at k-row round
-      // size the plan-analysis saving did not justify breaking that
-      // contract)
-      var cent = cent0
-      var prevRound: Option[DataFrame] = None
-      for (_ <- 0 until iters) {
-        val packed = cent.groupBy()
-          .agg(array_sort(collect_list(struct(col("cid"), col("e").as("ce"))))
-            .as("cpack"))
-        val means = roundMeans(packed)
-        val next = cent.select(col("cid"), col("e").as("prev"))
-          .join(means.withColumnRenamed("e", "upd"), Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("upd"), col("prev")).as("e"))
-          .persist(MEMORY_AND_DISK)
-        next.count() // materialize: flat lineage round to round
-        prevRound.foreach(_.unpersist(blocking = false))
-        prevRound = Some(next)
-        cent = next
-      }
-      c.unpersist()
-      cent
-    }
+    c.unpersist()
+    stateFrame(cent0, trained)
   }
 
   /** Mean squared L2 distortion of `corpus` under `centroids` — the
@@ -700,16 +686,16 @@ object Similarity {
     */
   def pqEncode(corpus: DataFrame, codebook: DataFrame, m: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val subDim = 64 / m // embeddings are 64-dim
+    val sd = subDim(m)
     val c = withNorm(corpus, idCol, vecCol)
     val cw = withNorm(codebook, idCol, vecCol)
       .select(col("vec_id").as("cid"), col("e").as("ce"))
     val ss = explode(array((0 until m).map(lit): _*)).as("s")
-    // sub-slices: slice() is 1-based; subspace s covers [s*subDim+1, subDim]
+    // sub-slices: slice() is 1-based; subspace s covers [s*sd+1, sd]
     val corpusSub = c.select(col("vec_id"), ss, col("e"))
-      .withColumn("vs", slice(col("e"), col("s") * subDim + 1, lit(subDim)))
+      .withColumn("vs", slice(col("e"), col("s") * sd + 1, lit(sd)))
     val cwSub = cw.select(col("cid"), ss, col("ce"))
-      .withColumn("cs", slice(col("ce"), col("s") * subDim + 1, lit(subDim)))
+      .withColumn("cs", slice(col("ce"), col("s") * sd + 1, lit(sd)))
       .withColumn("sqc", dot(col("cs"), col("cs")))
     // L2 argmin: |v|^2 is constant per (vec,s), so minimize |c|^2 - 2<v,c>
     corpusSub.join(broadcast(cwSub), Seq("s"))
@@ -770,18 +756,18 @@ object Similarity {
       codebook: DataFrame, m: Int, idCol: String, vecCol: String,
       cand: Option[DataFrame]): DataFrame = {
     require(m == 8, "pivoted fold is written for m = 8")
-    val subDim = 64 / m
+    val sd = subDim(m)
     val q = withNorm(queries, idCol, vecCol)
     val cw = withNorm(codebook, idCol, vecCol)
       .select(col("vec_id").as("cid"), col("e").as("ce"))
     val ss = explode(array((0 until m).map(lit): _*)).as("s")
     val cwSub = cw.select(col("cid"), ss, col("ce"))
-      .withColumn("cs", slice(col("ce"), col("s") * subDim + 1, lit(subDim)))
+      .withColumn("cs", slice(col("ce"), col("s") * sd + 1, lit(sd)))
       .withColumn("sqc", dot(col("cs"), col("cs")))
       .drop("ce")
     // per-query LUT: dot(q_sub, codeword_sub) for every (s, cid)
     val lut = q.select(col("vec_id").as("query_id"), col("nrm").as("qn"), ss, col("e"))
-      .withColumn("qs", slice(col("e"), col("s") * subDim + 1, lit(subDim)))
+      .withColumn("qs", slice(col("e"), col("s") * sd + 1, lit(sd)))
       .join(broadcast(cwSub), Seq("s"))
       .select(col("query_id"), col("qn"), col("s"), col("cid"),
         dot(col("qs"), col("cs")).as("dq"), col("sqc"))
@@ -805,62 +791,50 @@ object Similarity {
 
   /** Trained PQ codebook: per-subspace Lloyd's k-means (m INDEPENDENT
     * codebooks — the defining property of product quantization), run as
-    * ONE composite-keyed iteration: assignment is a broadcast argmin
-    * join keyed on the subspace, means are a map-side-combined
-    * (s, cid, pos) aggregation, so every subspace trains in the same
-    * two jobs per round. Codewords materialize as k full-width vectors
+    * ONE composite-keyed (s, cid) iteration on the shared [[lloyd]]
+    * loop: the k·64-double codebook lives on the driver (the
+    * spark.ml-KMeans shape), assignment is a row-local argmin against
+    * the LITERAL codewords (whole-stage codegen, no join, no shuffle)
+    * and the means are one map-side-combined (s, cid) aggregate with an
+    * avg column per position, so every subspace trains in the same ONE
+    * query per round. Codewords materialize as k full-width vectors
     * (subspace s's codeword j = slice s of vector j) — the exact shape
     * [[pqEncode]]/[[pqTopK]] consume, so a trained codebook drops in
     * for the fixed one.
     *
     * Deterministic seeding (the k smallest-id corpus vectors) and
-    * deterministic empty-cell handling (keep the previous codeword);
-    * per-round state is k·dim, lineage cut per round. Float means make
-    * the trained values fold-order-sensitive in the last ulp, so the
-    * composed query is rows-only gated (like `ann_ivf_trained`), with
-    * quality spec-gated via [[pqDistortion]]. */
+    * deterministic empty-cell handling (keep the previous codeword).
+    * Float means make the trained values fold-order-sensitive in the
+    * last ulp, so the composed query is rows-only gated (like
+    * `ann_ivf_trained`), with quality spec-gated via [[pqDistortion]]. */
   def pqTrain(corpus: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 3,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = corpus.sparkSession
     import spark.implicits._
-    val subDim = 64 / m
+    val sd = subDim(m)
     val c = withNorm(corpus, idCol, vecCol)
     val ss = explode(array((0 until m).map(lit): _*)).as("s")
     val sub = c.select(ss, col("e"))
-      .withColumn("vs", slice(col("e"), col("s") * subDim + 1, lit(subDim)))
+      .withColumn("vs", slice(col("e"), col("s") * sd + 1, lit(sd)))
       .select("s", "vs")
       .persist(MEMORY_AND_DISK)
-    // The codebook lives on the DRIVER between rounds (k·64 doubles —
-    // the spark.ml-KMeans shape): assignment is a row-local unrolled
-    // argmin against the LITERAL codewords (whole-stage codegen, no
-    // join, no shuffle), so each Lloyd round is exactly ONE job — the
-    // map-side-combined elementwise-mean pass, whose k·m·subDim result
-    // is the only thing crossing to the driver. Absent (s, cid, pos)
-    // rows are empty cells: the codeword keeps its previous value
-    // (deterministic; no resampling randomness).
     // seeds: the k smallest-id corpus vectors
     val seedVecs = c.orderBy("vec_id").limit(k).select("e")
       .collect().map(_.getSeq[Double](0).toArray)
     require(seedVecs.length == k, s"corpus has fewer than $k vectors")
-    val cb = Array.tabulate(m, k)((s, j) =>
-      seedVecs(j).slice(s * subDim, (s + 1) * subDim))
-    for (_ <- 0 until iters) {
-      val cid = literalArgmin(col("vs"), col("s"), cb)
-      // one avg column per position (see residualTrainFromSub): the
-      // same per-round single job, subDim× fewer shuffled rows, hash
-      // aggregate instead of the posexplode round trip
-      sub.select(col("s"), cid.as("cid"), col("vs"))
+    // state in (s, cid) order, so subspace s's codewords are row s
+    val seeds = for (s <- 0 until m; j <- 0 until k)
+      yield Seq(s, j) -> seedVecs(j).slice(s * sd, (s + 1) * sd)
+    def codebook(state: LloydState) =
+      state.map(_._2).grouped(k).map(_.toArray).toArray
+    val cb = codebook(lloyd(seeds, iters) { state =>
+      sub.select(col("s"),
+          literalArgmin(col("vs"), col("s"), codebook(state)).as("cid"), col("vs"))
         .groupBy("s", "cid")
-        .agg(array((0 until subDim).map(i =>
+        .agg(array((0 until sd).map(i =>
           avg(col("vs").getItem(i))): _*).as("mu"))
-        .collect()
-        .foreach { r =>
-          val mu = r.getSeq[Double](2)
-          var p = 0
-          while (p < subDim) { cb(r.getInt(0))(r.getInt(1))(p) = mu(p); p += 1 }
-        }
-    }
+    })
     sub.unpersist(blocking = false)
     // package the m per-subspace codebooks as k full-width vectors
     // (a plain literal table — nothing stays cached)
@@ -887,21 +861,21 @@ object Similarity {
     * specs assert training lowers it vs the untrained codebook. */
   def pqDistortion(corpus: DataFrame, codebook: DataFrame, m: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): Double = {
-    val subDim = 64 / m
+    val sd = subDim(m)
     val codes = pqEncode(corpus, codebook, m, idCol, vecCol)
     val c = withNorm(corpus, idCol, vecCol)
     val cw = withNorm(codebook, idCol, vecCol)
       .select(col("vec_id").as("cid"), col("e").as("ce"))
     val sub = c.select(col("vec_id"),
         explode(array((0 until m).map(lit): _*)).as("s"), col("e"))
-      .withColumn("vs", slice(col("e"), col("s") * subDim + 1, lit(subDim)))
+      .withColumn("vs", slice(col("e"), col("s") * sd + 1, lit(sd)))
     sub.join(codes, Seq("vec_id", "s")).join(broadcast(cw), "cid")
       .select(col("vec_id"),
         (dot(col("vs"), col("vs")) -
           lit(2.0) * dot(col("vs"),
-            slice(col("ce"), col("s") * subDim + 1, lit(subDim))) +
-          dot(slice(col("ce"), col("s") * subDim + 1, lit(subDim)),
-            slice(col("ce"), col("s") * subDim + 1, lit(subDim)))).as("r"))
+            slice(col("ce"), col("s") * sd + 1, lit(sd))) +
+          dot(slice(col("ce"), col("s") * sd + 1, lit(sd)),
+            slice(col("ce"), col("s") * sd + 1, lit(sd)))).as("r"))
       .groupBy("vec_id").agg(sum(col("r")).as("err"))
       .agg(avg(col("err"))).head().getDouble(0)
   }
@@ -1050,15 +1024,16 @@ object Similarity {
     * k-means over each cell's residual sub-vectors, for all (cell,
     * subspace) pairs AT ONCE — the [[pqTrain]] composite-key trick with
     * the cell joining the key, so however many cells the index has,
-    * every codebook trains in the same two jobs per round (assignment =
-    * one equi-join on (cell, s); means = one map-side-combined
-    * (cell, s, cid) hash aggregate with an avg column per position). Seeds are each cell's `k`
+    * every codebook trains in the same ONE query per round (assignment =
+    * a row-local argmin against the broadcast (cell, s) codebook row;
+    * means = one map-side-combined (cell, s, cid) hash aggregate with
+    * an avg column per position). Seeds are each cell's `k`
     * smallest-id members (bounded-heap selection, no per-cell sort);
     * cells with fewer than `k` members keep their seed count. Empty
     * codewords persist unchanged (deterministic, like [[pqTrain]]).
     *
     * Returns (cell, s, cid, cs) — subspace `s`'s codeword `cid` for
-    * `cell`, as a `subDim`-float array. */
+    * `cell`, as a 64 / `m`-double array. */
   def residualTrain(corpus: DataFrame, centroids: DataFrame, m: Int = 8,
       k: Int = 16, iters: Int = 2, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
@@ -1072,10 +1047,10 @@ object Similarity {
 
   /** Residual rows sliced into per-subspace rows: (vec_id, cell, s, vs). */
   private def resSub(res: DataFrame, m: Int): DataFrame = {
-    val subDim = 64 / m
+    val sd = subDim(m)
     val ss = explode(array((0 until m).map(lit): _*)).as("s")
     res.select(col("vec_id"), col("cell"), ss, col("r"))
-      .withColumn("vs", slice(col("r"), col("s") * subDim + 1, lit(subDim)))
+      .withColumn("vs", slice(col("r"), col("s") * sd + 1, lit(sd)))
       .select("vec_id", "cell", "s", "vs")
   }
 
@@ -1098,53 +1073,22 @@ object Similarity {
     column(graft.functions.NearestPackedCodeword(expression(vs), expression(cbk)))
   }
 
-  /** Codebook row cap for the driver-resident Lloyd loop below:
-    * cells·k·m rows × subDim doubles ≈ 16 MB of driver state at the cap
-    * (the spark.ml-KMeans / [[pqTrain]] shape). Indexes whose cell count
-    * pushes past it (per-cell codebooks grow with the cell count, which
-    * is data-dependent at lake scale) take the distributed
-    * checkpoint-per-round path instead — never a silent driver OOM. */
-  private val DriverCodebookMaxRows = 1 << 18
-
   /** [[residualTrain]] body over an already-sliced (ideally persisted)
     * residual-subspace table — the composed train-and-serve path shares
-    * one residual pass between training and encoding. Per Lloyd round:
-    * pack+broadcast the (cell, s, cid) codebook, row-local argmin, ONE
-    * map-side-combined (cell, s, cid) mean aggregate — the corpus is
-    * never joined against candidate rows and never shuffled whole.
-    *
-    * The codebook lives on the DRIVER between rounds (round 13, judge
-    * r12 #4 — the [[pqTrain]] lifecycle, generalized): the seed
-    * codebook is collected once (bounded by
-    * [[DriverCodebookMaxRows]] — cells·k·m rows, NOT data-sized), each
-    * round broadcasts the locally-packed codebook as a LocalRelation
-    * (built driver-side, no pack job, no JIT-threshold literal — the
-    * argmin stays the [[NearestPackedCodeword]] broadcast-join form)
-    * and runs exactly ONE Spark job: the map-side-combined means
-    * aggregate, whose cells·k·m result is the only thing crossing back.
-    * The r12 form paid 2–3 jobs per round (pack-codebook aggregate
-    * feeding the broadcast + the checkpoint materialization) plus a
-    * left join, and — as the r12 advisor noted — left every
-    * intermediate round's localCheckpoint blocks to the ContextCleaner
-    * while forfeiting recompute-on-executor-loss; driver state has
-    * neither problem. Per-position means, empty-codeword keep-previous
-    * semantics and the cid-ordered first-wins argmin tie-break are
-    * IDENTICAL (an absent (cell,s,cid) group keeps its codeword via the
-    * local merge exactly as the old left-join coalesce did); the
-    * composed ann_ivfadc_r [R] rows were dump-compared bit-identical
-    * pre/post.
-    *
-    * When the collect guard trips, the distributed fallback runs the
-    * pre-r13 loop: eager localCheckpoint per round (plan truncation —
-    * the composed plan reached ~1,900 Exchange nodes without it, guide
-    * §3.3/§7.3). Cluster-mode caveat (advisor r12): localCheckpoint
-    * blocks of intermediate rounds linger until ContextCleaner GC and
-    * are not executor-loss tolerant — acceptable for bounded
-    * (cells·k·m) rounds, and the driver path makes it the rare branch. */
+    * one residual pass between training and encoding. Runs on the
+    * shared [[lloyd]] loop: each round packs the driver-resident
+    * (cell, s, cid) codebook locally into one cid-sorted row per
+    * (cell, s), broadcasts it as a LocalRelation, assigns every residual
+    * sub-vector by the row-local
+    * [[graft.functions.NearestPackedCodeword]] argmin (ties to the
+    * smallest cid) and collects ONE map-side-combined (cell, s, cid)
+    * means aggregate — the corpus is never joined against candidate
+    * rows and never shuffled whole. */
   private[graft] def residualTrainFromSub(sub: DataFrame, m: Int, k: Int,
       iters: Int): DataFrame = {
     import scala.jdk.CollectionConverters._
     val spark = sub.sparkSession
+    val sd = subDim(m)
     // per-cell seeds: k smallest member ids, densely renumbered 0..k-1
     // per cell via a bounded heap (never a per-cell corpus sort)
     val seedRows = graft.plans.TopK.perKeyTwoPhase(
@@ -1155,79 +1099,24 @@ object Similarity {
       .withColumn("cid", row_number().over(seedW) - 1)
     val seedCw = seeds.join(sub, Seq("vec_id", "cell"))
       .select(col("cell"), col("s"), col("cid"), col("vs").as("cs"))
-    val subDim = 64 / m
-    // bounded collect probe: one job either way (the seed codebook had
-    // to materialize before round 1 regardless — the old path did it
-    // inside round 1's checkpoint job)
-    val probe = seedCw.limit(DriverCodebookMaxRows + 1).collect()
-    if (probe.length <= DriverCodebookMaxRows) {
-      val cellT = sub.schema("cell").dataType
-      val sT = sub.schema("s").dataType
-      val csT = org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)
-      val cbkSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell", cellT),
-        org.apache.spark.sql.types.StructField("s", sT),
-        org.apache.spark.sql.types.StructField("cbk",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("cid",
-                org.apache.spark.sql.types.IntegerType),
-              org.apache.spark.sql.types.StructField("cs", csT)))))))
-      // local rows as (cell, s, cid, cs) — cs kept as the collected
-      // Seq[Double] values bit-for-bit
-      var cw: Array[Row] = probe
-      for (_ <- 0 until iters) {
-        // pack locally: (cell, s) → cid-SORTED (cid, cs) entries, the
-        // exact array_sort(collect_list(struct(cid, cs))) layout
-        // NearestPackedCodeword indexes (cid unique per (cell, s))
-        val packedLocal: Seq[Row] = cw.toSeq.groupBy(r => (r.get(0), r.get(1)))
-          .map { case ((cell, s), rows) =>
-            Row(cell, s,
-              rows.sortBy(_.getInt(2)).map(r => Row(r.getInt(2), r.get(3))))
-          }.toSeq
-        val cbkDf = spark.createDataFrame(packedLocal.asJava, cbkSchema)
-        val means = sub.join(broadcast(cbkDf), Seq("cell", "s"))
-          .select(col("cell"), col("s"),
-            packedArgmin(col("vs"), col("cbk")).as("cid"), col("vs"))
-          .groupBy("cell", "s", "cid")
-          .agg(array((0 until subDim).map(i =>
-            avg(col("vs").getItem(i))): _*).as("upd"))
-          .collect()
-        val upd = means.map(r =>
-          ((r.get(0), r.get(1), r.get(2)), r.getSeq[Double](3))).toMap
-        cw = cw.map { r =>
-          upd.get((r.get(0), r.get(1), r.get(2))) match {
-            case Some(mu) => Row(r.get(0), r.get(1), r.get(2), mu)
-            case None => r // empty codeword: keep the previous value
-          }
-        }
+    val cbkT = StructType.fromDDL(s"cell ${sub.schema("cell").dataType.sql}, " +
+      s"s ${sub.schema("s").dataType.sql}, " +
+      "cbk array<struct<cid: int, cs: array<double>>>")
+    val trained = lloyd(collectState(seedCw), iters) { state =>
+      // state order within a (cell, s) is cid order: the
+      // array_sort(collect_list(struct(cid, cs))) layout of packCodebook
+      val cbk = state.groupBy(_._1.take(2)).map { case (cellS, es) =>
+        Row.fromSeq(cellS :+ es.map { case (key, v) => Row(key(2), v.toSeq) })
       }
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell", cellT),
-        org.apache.spark.sql.types.StructField("s", sT),
-        org.apache.spark.sql.types.StructField("cid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("cs", csT)))
-      spark.createDataFrame(cw.toSeq.asJava, outSchema)
-    } else {
-      // distributed fallback — the pre-r13 loop, see scaladoc
-      var cw = seedCw
-      for (_ <- 0 until iters) {
-        val assigned = sub.join(broadcast(packCodebook(cw)), Seq("cell", "s"))
-          .select(col("cell"), col("s"),
-            packedArgmin(col("vs"), col("cbk")).as("cid"), col("vs"))
-        val means = assigned
-          .groupBy("cell", "s", "cid")
-          .agg(array((0 until subDim).map(i =>
-            avg(col("vs").getItem(i))): _*).as("upd"))
-        cw = cw.join(means, Seq("cell", "s", "cid"), "left")
-          .select(col("cell"), col("s"), col("cid"),
-            coalesce(col("upd"), col("cs")).as("cs"))
-          .localCheckpoint(true)
-      }
-      cw
+      sub.join(broadcast(spark.createDataFrame(cbk.toSeq.asJava, cbkT)),
+          Seq("cell", "s"))
+        .select(col("cell"), col("s"),
+          packedArgmin(col("vs"), col("cbk")).as("cid"), col("vs"))
+        .groupBy("cell", "s", "cid")
+        .agg(array((0 until sd).map(i =>
+          avg(col("vs").getItem(i))): _*).as("upd"))
     }
+    stateFrame(seedCw, trained)
   }
 
   /** Encode every corpus vector against its OWN cell's residual
@@ -1319,7 +1208,7 @@ object Similarity {
       centroids: DataFrame, resCodebook: DataFrame, nProbe: Int,
       m: Int, k: Int, idCol: String, vecCol: String): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    val subDim = 64 / m
+    val sd = subDim(m)
     val cent = withNorm(centroids, idCol, vecCol)
       .select(col("vec_id").as("cell"), col("e").as("ce"))
     // per-cell packed codebook with query-independent constants;
@@ -1327,7 +1216,7 @@ object Similarity {
     // s·kc + cid — the layout AdcPartials indexes directly
     val cbk = resCodebook.join(broadcast(cent), "cell")
       .select(col("cell"), col("s"), col("cid"), col("cs"),
-        dot(slice(col("ce"), col("s") * subDim + 1, lit(subDim)), col("cs"))
+        dot(slice(col("ce"), col("s") * sd + 1, lit(sd)), col("cs"))
           .as("cc"),
         dot(col("cs"), col("cs")).as("csq"))
       .groupBy("cell")
@@ -1365,11 +1254,11 @@ object Similarity {
   def residualDistortion(corpus: DataFrame, centroids: DataFrame,
       resCodebook: DataFrame, m: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): Double = {
-    val subDim = 64 / m
+    val sd = subDim(m)
     val res = residuals(corpus, centroids, idCol, vecCol)
     val ss = explode(array((0 until m).map(lit): _*)).as("s")
     val sub = res.select(col("vec_id"), col("cell"), ss, col("r"))
-      .withColumn("vs", slice(col("r"), col("s") * subDim + 1, lit(subDim)))
+      .withColumn("vs", slice(col("r"), col("s") * sd + 1, lit(sd)))
     val codes = residualEncode(corpus, centroids, resCodebook, m, idCol, vecCol)
     sub.join(codes, Seq("vec_id", "cell", "s"))
       .join(resCodebook, Seq("cell", "s", "cid"))

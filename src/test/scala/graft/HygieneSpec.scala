@@ -60,6 +60,15 @@ class HygieneSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
   }
 
+  test("pqTrain and residualTrain release their corpus-sized sub-vector " +
+      "caches; the returned codebooks hold no blocks") {
+    val leakedPq = leakedBlocks(Similarity.pqTrain(embs, iters = 2))
+    assert(leakedPq.isEmpty, s"pqTrain leaked cached RDDs: $leakedPq")
+    val leakedRes = leakedBlocks(Similarity.residualTrain(
+      embs, embs.filter(col("vec_id") < 16), iters = 2))
+    assert(leakedRes.isEmpty, s"residualTrain leaked cached RDDs: $leakedRes")
+  }
+
   test("basketRules releases its serialized basket cache; result " +
       "release leaves zero blocks (round 13: the width-filtered basket " +
       "table is persisted across its three consumers above the " +

@@ -498,6 +498,72 @@ class PlanAuditSpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("Lloyd training: every round of kmeansRefine, pqTrain and " +
+      "residualTrain is ONE query, and the jobs it launches are pinned") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val sentinelKey = "graft.test.sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val queries = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinels = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty(sentinelKey) != null))
+          sentinels.incrementAndGet()
+        else jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => queries.incrementAndGet()
+        case _ =>
+      }
+    }
+    // the listener queue is async FIFO: once a sentinel job (a raw RDD
+    // count, no SQL execution) is observed, every earlier event counted
+    def drain(): Unit = {
+      val want = sentinels.get() + 1
+      sc.setLocalProperty(sentinelKey, "1")
+      try sc.parallelize(Seq(1)).count()
+      finally sc.setLocalProperty(sentinelKey, null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (sentinels.get() < want && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(sentinels.get() >= want, "sentinel job never observed")
+    }
+    def countsOf(train: => org.apache.spark.sql.DataFrame): (Int, Int) = {
+      drain()
+      jobs.set(0)
+      queries.set(0)
+      train.collect()
+      drain()
+      (queries.get(), jobs.get())
+    }
+    val embs = Tables.embeddings(spark, sfDir)
+    val seeds = embs.filter(col("vec_id") < 16)
+    val trainers = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "kmeansRefine" -> (i => graft.ops.Similarity.kmeansRefine(embs, seeds, i)),
+      "pqTrain" -> (i => graft.ops.Similarity.pqTrain(embs, iters = i)),
+      "residualTrain" -> (i =>
+        graft.ops.Similarity.residualTrain(embs, seeds, iters = i)))
+    sc.addSparkListener(listener)
+    try {
+      // iters = 3 minus iters = 1: two rounds, the set-up cancels out
+      val twoRounds = trainers.map { case (name, train) =>
+        train(1).collect() // warm the source: footer/listing jobs
+        val (q3, j3) = countsOf(train(3))
+        val (q1, j1) = countsOf(train(1))
+        name -> (q3 - q1, j3 - j1)
+      }.toMap
+      // each round is one collect of the means aggregate; AQE runs each
+      // of its query stages as its own job — the per-round job counts
+      // (k-means 4, PQ 2, residual PQ 3) are those measured before the
+      // three loops were shared
+      assert(twoRounds == Map("kmeansRefine" -> (2, 2 * 4),
+          "pqTrain" -> (2, 2 * 2), "residualTrain" -> (2, 2 * 3)),
+        s"(queries, jobs) launched by two extra rounds: $twoRounds")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("Ranking.globalRankCumsum equals the partitionless window on a " +
       "multi-partition input (ties, nulls in value col exercised)") {
     import org.apache.spark.sql.expressions.Window

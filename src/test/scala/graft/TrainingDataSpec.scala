@@ -1148,6 +1148,48 @@ class TrainingDataSpec extends SparkTestBase {
     assert(refined.count() == 16)
   }
 
+  test("kmeansRefine: string cids train like long cids, empty seeds " +
+      "give an empty (cid, e) frame, iters = 0 returns the seeds") {
+    val embs = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val seeds = embs.filter(col("vec_id") < 16)
+    // zero-padded, so string order equals numeric order and the
+    // smallest-cid tie-break picks the same cell
+    val strSeeds = seeds.select(
+      lpad(col("vec_id").cast("string"), 4, "0").as("vec_id"), col("embedding"))
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      r.get(0).toString.toLong ->
+        r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits)).toMap
+    val asLong = Similarity.kmeansRefine(embs, seeds, iters = 2)
+    val asString = Similarity.kmeansRefine(embs, strSeeds, iters = 2)
+    assert(asString.schema("cid").dataType ==
+      org.apache.spark.sql.types.StringType)
+    assert(bits(asString) == bits(asLong),
+      "string-cid centroids differ from the long-cid ones")
+    val seedBits = seeds.collect().map(r => r.getLong(0) ->
+      r.getSeq[Float](1).map(f => java.lang.Double.doubleToRawLongBits(f.toDouble))).toMap
+    assert(bits(asLong) != seedBits, "two rounds left every seed in place")
+    assert(bits(Similarity.kmeansRefine(embs, seeds, iters = 0)) == seedBits)
+    val empty = Similarity.kmeansRefine(embs, seeds.limit(0), iters = 2)
+    assert(empty.columns.toSeq == Seq("cid", "e"))
+    assert(empty.count() == 0)
+  }
+
+  test("PQ subspace count must evenly split the 64 dims: m = 3 and " +
+      "m = 0 fail with the requirement named") {
+    val embs = Tables.embeddings(spark, sfDir)
+    val fixed = embs.filter(col("vec_id") >= 16 && col("vec_id") < 32)
+    for (m <- Seq(3, 0)) {
+      val errs = Seq(
+        intercept[IllegalArgumentException](Similarity.pqTrain(embs, m = m)),
+        intercept[IllegalArgumentException](Similarity.pqEncode(embs, fixed, m = m)),
+        intercept[IllegalArgumentException](
+          Similarity.residualTrain(embs, fixed, m = m)))
+      errs.foreach(e => assert(e.getMessage.contains(
+        s"m = $m PQ subspaces must evenly split the 64 embedding dims"),
+        e.getMessage))
+    }
+  }
+
   test("trained IVF: results are true-cosine top-k over probed cells with sane recall") {
     val embs = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = embs.filter(col("vec_id") < 10)
